@@ -150,11 +150,7 @@ def search_impact(
     if engine == "kernel":
         import numpy as np
 
-        from ..search.searcher import (
-            ARRAY_RESULT_SCHEMA,
-            _finalize_arrays,
-            _segment_score_fn,
-        )
+        from ..search.searcher import kernel_search
 
         def _shape(tf, dl, _scale=scale):
             return tf.astype(np.float64) / _scale
@@ -162,26 +158,8 @@ def search_impact(
         boosts: Dict[int, Dict[str, float]] = {}
         for qid, t, v in rows:
             boosts.setdefault(qid, {})[t] = v
-        all_terms = sorted({t for m in boosts.values() for t in m})
-        shape_fns = {t: _shape for t in all_terms}
-        seg_counts = {int(sg): int(c)
-                      for sg, c in index.stats["segments"].items()}
-        blocks = index.blocks.select(
-            "term", "segment", "first_doc", "last_doc", "n", "max_tf",
-            "min_dl", "sum_tf", "docs_bin", "tfs_bin", "dls_bin",
-        ).filter(F.col("term").isin(all_terms))
-        fn = _segment_score_fn(boosts, (0.0, 0.0, False), seg_counts, k,
-                               prune=True, shape_fns=shape_fns,
-                               dead_by_seg=index.dead_by_segment or None)
-        from ..search.searcher import BATCH_REPARTITION_MIN_QUERIES
-
-        if len(boosts) >= BATCH_REPARTITION_MIN_QUERIES:
-            n_parts = min(512, 4 * max(1, len(seg_counts)))
-            blocks = blocks.repartition(n_parts, "segment")
-        hits = blocks.groupBy("segment").applyInPandas(
-            fn, schema=ARRAY_RESULT_SCHEMA
-        )
-        return _finalize_arrays(index, hits, k)
+        shape_fns = {t: _shape for m in boosts.values() for t in m}
+        return kernel_search(index, boosts, k, shape_fns=shape_fns)
     q = spark.createDataFrame(rows, "qid int, term string, qval double")
     postings = index.live_docvec.select(
         "doc_id", F.explode(F.arrays_zip("terms", "tfs")).alias("e")

@@ -1260,8 +1260,10 @@ def _fr_bm25_oracle(k1: float, b: float) -> str:
 
     m_values = ", ".join(f"('{k}', '{v.replace(chr(39), chr(39) * 2)}')"
                          for k, v in sorted(FR_MAP.items()))
-    arts = "|".join(sorted(FRENCH_ELISION_ARTICLES, key=len,
-                           reverse=True))
+    # longest first for the regex alternation; ties by text, so the SQL
+    # does not follow the set's hash order
+    arts = "|".join(sorted(FRENCH_ELISION_ARTICLES,
+                           key=lambda a: (-len(a), a)))
     stops = ", ".join(f"'{w}'" for w in sorted(FRENCH_STOP_WORDS))
     return f"""
 WITH m(word, fr) AS (VALUES {m_values}),

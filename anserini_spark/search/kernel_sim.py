@@ -25,14 +25,8 @@ from typing import Callable, Dict, Optional
 
 import numpy as np
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from .searcher import (
-    ARRAY_RESULT_SCHEMA,
-    InvertedIndex,
-    _finalize_arrays,
-    _segment_score_fn,
-)
+from .searcher import InvertedIndex, kernel_search
 
 _LOG2 = np.log(2.0)
 
@@ -186,11 +180,8 @@ def search_kernel_similarity(
     per_q = (dict(boosts) if boosts is not None else
              {qid: Counter(index.analyze_query(t))
               for qid, t in queries.items()})
-    all_terms = sorted({t for c in per_q.values() for t in c})
-    empty = "qid int, docid string, rank int, score double"
-    if not all_terms:
-        return index.spark.createDataFrame([], empty)
-    stats = index.term_stats(all_terms)  # driver-side pyarrow lookup
+    # driver-side pyarrow lookup
+    stats = index.term_stats({t for c in per_q.values() for t in c})
     n = float(index.stats["doc_count"])
     avgdl = float(index.stats["avgdl"])
     sum_tf = float(index.stats["sum_tf"])
@@ -202,27 +193,8 @@ def search_kernel_similarity(
         qid: {t: float(cnt) for t, cnt in c.items() if t in shape_fns}
         for qid, c in per_q.items()
     }
-    boosts = {qid: m for qid, m in boosts.items() if m}
-    if not boosts:
-        return index.spark.createDataFrame([], empty)
-    seg_counts = {int(s): int(c) for s, c in index.stats["segments"].items()}
-    blocks = index.blocks.select(
-        "term", "segment", "first_doc", "last_doc", "n", "max_tf", "min_dl", "sum_tf", "docs_bin", "tfs_bin", "dls_bin"
-    ).filter(F.col("term").isin(sorted(shape_fns)))
-    fn = _segment_score_fn(boosts, (0.0, 0.0, False), seg_counts, k, prune,
-                           shape_fns=shape_fns,
-                           dead_by_seg=index.dead_by_segment or None)
-    # 4x partitions vs segments for batches: avoid balls-in-bins
-    # straggler tasks (see search_kernel)
-    from .searcher import BATCH_REPARTITION_MIN_QUERIES
-
-    if len(boosts) >= BATCH_REPARTITION_MIN_QUERIES:
-        n_parts = min(512, 4 * max(1, len(seg_counts)))
-        blocks = blocks.repartition(n_parts, "segment")
-    hits = blocks.groupBy("segment").applyInPandas(
-        fn, schema=ARRAY_RESULT_SCHEMA
-    )
     # Lucene returns every doc matching >=1 query term, INCLUDING
     # docs whose clamped LM score is 0 (golden: QLD `1 Q0 WSJ_1 3
     # 0.000000`, `TrecEndToEndTest.java:92-96`) — no score filter
-    return _finalize_arrays(index, hits, k)
+    return kernel_search(index, {q: m for q, m in boosts.items() if m}, k,
+                         prune, shape_fns=shape_fns)

@@ -39,6 +39,7 @@ from ..analysis.analyzer import analyze, stem_mode
 from ..index.blocks import decode_block_run
 from ..index.build import SEG_SHIFT
 from .bm25 import BM25Params, idf
+from .tieadjust import rank_and_adjust
 
 
 class LocalSearcher:
@@ -236,23 +237,11 @@ class LocalSearcher:
             cand, scores = cand[keep], scores[keep]
         doc_ids = self._unslot(cand)
         urls = self._urls_for(doc_ids)
-        order = sorted(
-            range(len(doc_ids)),
-            key=lambda i: (-scores[i], urls[int(doc_ids[i])]),
-        )[:k]
-        # tie adjustment (ScoreTiesAdjusterReranker.java:36-73)
-        out: List[Tuple[str, int, float]] = []
-        prev_round = None
-        dup = 0
-        for rank, i in enumerate(order, start=1):
-            r = round(float(scores[i]), 4)
-            if prev_round is not None and r == prev_round:
-                dup += 1
-            else:
-                dup = 0
-            prev_round = r
-            out.append((urls[int(doc_ids[i])], rank, r - dup * 1e-6))
-        return out
+        url = np.array([urls[int(d)] for d in doc_ids], dtype=object)
+        rows, rank, adjusted = rank_and_adjust(
+            np.zeros(len(url), dtype=np.int32), scores, url, k)
+        return list(zip(url[rows].tolist(), rank.tolist(),
+                        adjusted.tolist()))
 
     def batch_search(self, queries: Dict[int, str], k: int = 10):
         return {qid: self.search(q, k) for qid, q in queries.items()}

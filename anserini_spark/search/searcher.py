@@ -17,9 +17,17 @@ them and vs a pure-numpy oracle):
   inside one Arrow kernel per segment: vectorized varint decode (once
   per term, shared across the whole query batch), float32 term-at-a-
   time accumulation into a dense per-segment array with MaxScore/
-  block-max pruning, per-segment top-k, then a tiny shuffle merges
-  per-segment top-k by (score desc, url asc) exactly like Lucene's
-  BREAK_SCORE_TIES_BY_DOCID collector (`SearchCollection.java:115-116`).
+  block-max pruning, per-segment top-k packed into one array row per
+  (segment, qid). The per-qid merge ranks by (score desc, url asc)
+  exactly like Lucene's BREAK_SCORE_TIES_BY_DOCID collector
+  (`SearchCollection.java:115-116`). Small batches (single queries
+  included) finish on the driver: it collects the packed rows through
+  Arrow, merges them per qid in numpy and resolves the survivors' urls
+  in one broadcast join against the cached docmap — four Spark jobs
+  per query (kernel shuffle map + result, broadcast + url join), run
+  inside the call, and the returned run is a local relation. Batches
+  whose packed top-k exceeds ``DRIVER_FINALIZE_MAX_PAIRS`` merge on the
+  executors and stay lazy.
 
 Per-term float32 contributions are accumulated in float64 and narrowed
 to float32 at the end — Lucene's DisjunctionSumScorer likewise sums
@@ -44,9 +52,10 @@ from ..analysis.analyzer import analyze, stem_mode
 from ..index.blocks import decode_block_run
 from ..index.build import SEG_SHIFT
 from .bm25 import BM25Params, BM25Scorer
-from .tieadjust import adjust_score_ties
+from .tieadjust import adjust_score_ties, rank_and_adjust
 
 RESULT_SCHEMA = "qid int, doc_id long, score float"
+RUN_SCHEMA = "qid int, docid string, rank int, score double"
 BATCH_REPARTITION_MIN_QUERIES = 16
 # kernel paths emit ONE row per (segment, qid) with packed arrays:
 # |segments| * |queries| rows instead of |segments| * |queries| * k —
@@ -54,6 +63,14 @@ BATCH_REPARTITION_MIN_QUERIES = 16
 # JVM sort window (batch-throughput path; same bytes, ~1000x fewer
 # row headers/comparisons)
 ARRAY_RESULT_SCHEMA = "qid int, doc_id array<bigint>, score array<double>"
+# Kernel searches whose packed top-k holds at most this many
+# (doc_id, score) pairs (4 MB) finish on the driver
+# (``_finalize_local``): three Spark jobs fewer per call, which is
+# most of a single query's latency, for a numpy merge of < 0.1 s at
+# the cap. Larger batches keep the per-qid merge on the executors
+# (``_finalize_arrays``), so the driver never holds
+# |segments| x |queries| x k pairs of a large batch.
+DRIVER_FINALIZE_MAX_PAIRS = 1 << 18
 
 
 class InvertedIndex:
@@ -297,10 +314,12 @@ def _merge_topk_fn(k: int):
 
 def _finalize_arrays(index: InvertedIndex, hits: DataFrame,
                      k: int) -> DataFrame:
-    """Global merge for the kernel paths' packed-array output: per-qid
+    """Global merge for the kernel paths' packed-array output, on the
+    executors (batches too large for ``_finalize_local``): per-qid
     numpy top-k merge (|segments| rows per qid through the shuffle,
     not |segments| * k), then url join + exact (score desc, url asc)
-    final order for only the ~k survivors per qid."""
+    final order for only the ~k survivors per qid. Lazy: nothing runs
+    until the caller's action."""
     merged = hits.groupBy("qid").applyInPandas(
         _merge_topk_fn(k), schema="qid int, doc_id long, score double"
     )
@@ -318,6 +337,67 @@ def _finalize_arrays(index: InvertedIndex, hits: DataFrame,
         .select("qid", F.col("url").alias("docid"), "rank", "score")
     )
     return adjust_score_ties(ranked).orderBy("qid", "rank")
+
+
+def _finalize_local(index: InvertedIndex, hits: DataFrame,
+                    k: int) -> DataFrame:
+    """The same merge as ``_finalize_arrays``, on the driver, for
+    batches whose packed top-k fits ``DRIVER_FINALIZE_MAX_PAIRS``.
+    Eager: the kernel job and one url lookup job run here, not at the
+    caller's action, and three jobs fewer run than on the executors.
+
+    1. Collect the packed rows through Arrow (|segments| rows per qid).
+    2. Per qid keep every doc scoring >= the kth-largest score (ties
+       included, an exact superset of the top-k): one sort over the
+       whole batch, no per-qid loop.
+    3. Resolve the survivors' urls in one job: the cached docmap
+       joined with a broadcast of the survivor ids.
+    4. Rank by (score desc, url asc) — BREAK_SCORE_TIES_BY_DOCID on
+       the collection docid (`SearchCollection.java:115-116`) — cut
+       at k and tie-adjust, in numpy.
+
+    The result is a local relation: collecting it runs no job. Driver
+    memory: the collect holds |queries| x sum over segments of
+    min(k, segment docs) (doc_id, score) pairs plus boundary ties,
+    16 B each, which the caller's cap keeps near 4 MB."""
+    import pyarrow.compute as pc
+
+    spark = index.spark
+    tbl = hits.toArrow()
+    lens = pc.list_value_length(tbl["doc_id"]).to_numpy()
+    qid = np.repeat(tbl["qid"].to_numpy(), lens)
+    doc = pc.list_flatten(tbl["doc_id"]).to_numpy()
+    score = pc.list_flatten(tbl["score"]).to_numpy()
+    if not len(doc):
+        return spark.createDataFrame([], RUN_SCHEMA)
+    order = np.lexsort((-score, qid))
+    qid, doc, score = qid[order], doc[order], score[order]
+    start = np.flatnonzero(np.r_[True, qid[1:] != qid[:-1]])
+    size = np.diff(np.r_[start, len(qid)])
+    kth = score[start + np.minimum(size, k) - 1]
+    keep = score >= np.repeat(kth, size)
+    # url attach: broadcast the bounded survivor ids (queries x ~k)
+    # into a streamed scan of the cached docmap — never a docmap
+    # shuffle; the inner merge drops ids the docmap lacks, as the
+    # executor path's join does
+    survivors = pd.DataFrame({"qid": qid[keep], "doc_id": doc[keep],
+                              "score": score[keep]})
+    ids = spark.createDataFrame(
+        pd.DataFrame({"doc_id": survivors["doc_id"].unique()}),
+        "doc_id long")
+    found = (index.docmap.select("doc_id", "url")
+             .join(F.broadcast(ids), "doc_id").toPandas())
+    survivors = survivors.merge(found, on="doc_id")
+    url = survivors["url"].to_numpy()
+    rows, rank, adjusted = rank_and_adjust(
+        survivors["qid"].to_numpy(), survivors["score"].to_numpy(), url, k)
+    pdf = pd.DataFrame({
+        "qid": survivors["qid"].to_numpy()[rows].astype(np.int32),
+        "docid": url[rows],
+        "rank": rank,
+        "score": adjusted,
+    })
+    return spark.createDataFrame(pdf, RUN_SCHEMA)
 
 
 def _finalize(index: InvertedIndex, hits: DataFrame, k: int) -> DataFrame:
@@ -363,8 +443,7 @@ def search_dataframe(
 ) -> DataFrame:
     hits = _score_dataframe(index, queries, params)
     if hits is None:
-        return index.spark.createDataFrame(
-            [], "qid int, docid string, rank int, score double")
+        return index.spark.createDataFrame([], RUN_SCHEMA)
     return _finalize(index, hits, params.k)
 
 
@@ -689,33 +768,34 @@ def _maxscore_query(terms, wmap, meta, get_decoded, decode_subset, acc,
     return cand, scores
 
 
-def search_kernel(
-    index: InvertedIndex, queries: Dict[int, str], params: BM25Params,
+def kernel_search(
+    index: InvertedIndex, weights: Dict[int, Dict[str, float]], k: int,
     prune: bool = True,
-    boosts: Optional[Dict[int, Dict[str, float]]] = None,
-    boosts_are_final: bool = False,
+    scorer_consts: Tuple[float, float, bool] = (0.0, 0.0, False),
+    shape_fns: Optional[Dict[str, object]] = None,
 ) -> DataFrame:
-    weights, scorer = _query_weights(index, queries, params, boosts,
-                                     boosts_are_final)
+    """Ranked run (``RUN_SCHEMA``) of the segment kernel, shared by
+    every kernel-backed engine. ``weights`` (qid -> term -> weight) are
+    scored as float32 BM25 from ``scorer_consts`` or, given
+    ``shape_fns``, as ``weight * shape`` in float64. The kernel hits
+    are the term-pruned blocks scan (``term IN`` pushed into parquet)
+    grouped by segment into one Arrow kernel each. Batches whose packed
+    top-k (|queries| x sum over segments of min(k, segment docs)
+    pairs) fits ``DRIVER_FINALIZE_MAX_PAIRS`` are ranked eagerly on the
+    driver (``_finalize_local``); larger ones lazily on the executors
+    (``_finalize_arrays``)."""
     all_terms = sorted({t for wmap in weights.values() for t in wmap})
     if not all_terms:
-        return index.spark.createDataFrame(
-            [], "qid int, docid string, rank int, score double"
-        )
+        return index.spark.createDataFrame([], RUN_SCHEMA)
     seg_counts = {int(s): int(c) for s, c in index.stats["segments"].items()}
-    # column-pruned: positional indexes carry pos_bin, which BM25
-    # scoring never reads — keep it out of the parquet scan
+    # column-pruned: positional indexes carry pos_bin, which scoring
+    # never reads — keep it out of the parquet scan
     blocks = index.blocks.select(
         "term", "segment", "first_doc", "last_doc", "n", "max_tf", "min_dl", "sum_tf", "docs_bin", "tfs_bin", "dls_bin"
     ).filter(F.col("term").isin(all_terms))
-    fn = _segment_score_fn(
-        {qid: dict(wmap) for qid, wmap in weights.items()},
-        (float(scorer.cache1), float(scorer.cache2), params.lossy),
-        seg_counts,
-        params.k,
-        prune,
-        dead_by_seg=index.dead_by_segment or None,
-    )
+    fn = _segment_score_fn(weights, scorer_consts, seg_counts, k, prune,
+                           shape_fns=shape_fns,
+                           dead_by_seg=index.dead_by_segment or None)
     # over-provision the group hash space for BATCH workloads: with
     # |segments| groups into |segments| reducers, balls-in-bins
     # collisions put 2-3 segments on one task and leave a third of the
@@ -730,7 +810,27 @@ def search_kernel(
     hits = blocks.groupBy("segment").applyInPandas(
         fn, schema=ARRAY_RESULT_SCHEMA
     )
-    return _finalize_arrays(index, hits, params.k)
+    pairs = len(weights) * sum(min(k, c) for c in seg_counts.values())
+    if pairs <= DRIVER_FINALIZE_MAX_PAIRS:
+        return _finalize_local(index, hits, k)
+    return _finalize_arrays(index, hits, k)
+
+
+def search_kernel(
+    index: InvertedIndex, queries: Dict[int, str], params: BM25Params,
+    prune: bool = True,
+    boosts: Optional[Dict[int, Dict[str, float]]] = None,
+    boosts_are_final: bool = False,
+) -> DataFrame:
+    """float32 BM25 through the segment kernel. Small batches are
+    eager (their Spark jobs run inside this call and the returned local
+    relation collects with no job); large ones are lazy (see
+    ``kernel_search``)."""
+    weights, scorer = _query_weights(index, queries, params, boosts,
+                                     boosts_are_final)
+    return kernel_search(
+        index, weights, params.k, prune,
+        (float(scorer.cache1), float(scorer.cache2), params.lossy))
 
 
 POSTINGS_SCHEMA = "term string, doc_id long, tf long, doclen long"

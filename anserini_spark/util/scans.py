@@ -46,7 +46,9 @@ def _local_bytes(path: str) -> int | None:
 
 
 def _local_rows(path: str) -> int | None:
-    """Row count from local parquet footers, or None if unreadable."""
+    """Row count from local parquet footers, or None (unknown) if
+    unreadable or if a directory holds no ``*.parquet`` file — a
+    layout this walk does not understand must not read as empty."""
     p = path[5:] if path.startswith("file:") else path
     try:
         import pyarrow.parquet as pq
@@ -54,13 +56,12 @@ def _local_rows(path: str) -> int | None:
         if os.path.isfile(p):
             return pq.ParquetFile(p).metadata.num_rows
         if os.path.isdir(p):
-            total = 0
-            for root, _, files in os.walk(p):
-                for fn in files:
-                    if fn.endswith(".parquet"):
-                        total += pq.ParquetFile(
-                            os.path.join(root, fn)).metadata.num_rows
-            return total
+            files = [os.path.join(root, fn)
+                     for root, _, names in os.walk(p)
+                     for fn in names if fn.endswith(".parquet")]
+            if not files:
+                return None
+            return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
     except Exception:
         return None
     return None

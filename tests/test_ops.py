@@ -454,3 +454,27 @@ def test_jpeg_native_decoder_hook():
     # built-in codec restored: real dimensions again
     d = mm.decode_image(payload)
     assert (d["width"], d["height"]) == (16, 16)
+
+
+def test_oracle_sql_is_independent_of_hash_seed():
+    """oracle_sql() emits byte-identical SQL for every query in
+    processes with different PYTHONHASHSEED (no set iteration order
+    leaks into the generated text)."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = ("import json, __spark_entry__ as e; "
+            "print(json.dumps(e.oracle_sql(), sort_keys=True))")
+    out = []
+    for seed in ("1", "2"):
+        env = dict(os.environ, PYTHONHASHSEED=seed)
+        res = subprocess.run([sys.executable, "-c", code], cwd=root,
+                             env=env, capture_output=True, text=True,
+                             check=True)
+        out.append(json.loads(res.stdout.strip().splitlines()[-1]))
+    assert out[0].keys() == out[1].keys() and len(out[0]) >= 45
+    for name in out[0]:
+        assert out[0][name] == out[1][name], name

@@ -41,3 +41,22 @@ def test_rows_identical_with_and_without_fanout(spark, small_parquet):
 
 def test_local_rows_reads_footer(small_parquet):
     assert _local_rows(small_parquet) == 1000
+
+
+def test_local_rows_unknown_without_parquet_names(spark, small_parquet,
+                                                  tmp_path):
+    """A directory whose part files lack the .parquet suffix is an
+    unknown layout, not an empty one: rows are None, so a min_rows
+    floor cannot silently turn the fan-out off."""
+    import os
+    import shutil
+
+    odd = tmp_path / "odd"
+    odd.mkdir()
+    parts = sorted(f for f in os.listdir(small_parquet)
+                   if f.endswith(".parquet"))
+    for i, f in enumerate(parts):
+        shutil.copy(os.path.join(small_parquet, f), odd / f"part-{i}")
+    assert _local_rows(str(odd)) is None
+    df = read_parquet_fanout(spark, str(odd), min_rows=16384)
+    assert df.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
